@@ -16,10 +16,13 @@ self-contained implementation:
   driver's repeated-run row-count checks.
 
 Sizing: per-domain candidate sets are ~10^3-10^5 rows x ~101 dense
-features after top-k TF-IDF selection; exact-quantile splits are
-O(nodes * features * thresholds * n) vectorized — comfortably inside
-one executor task. The cluster-level parallelism comes from Spark
-running many domains concurrently, not from the fit itself.
+features after top-k TF-IDF selection. X is binned once per fit; each
+tree node then costs one gather plus 3 ``bincount``s over its
+n_node x features codes, i.e. O(depth * n * features) per tree, with a
+Python loop over features only to pick the winning split. The
+training margin comes from the leaves as the tree grows, not from a
+predict pass. The cluster-level parallelism comes from Spark running
+many domains concurrently, not from the fit itself.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ import pickle
 import numpy as np
 
 _EPS = 1e-12
+# per-block cap on a root node's rows x features histogram codes
+_BLOCK_CODES = 1 << 21
 
 
 def _sigmoid(z: np.ndarray) -> np.ndarray:
@@ -50,9 +55,7 @@ class _Node:
 def _bin_features(X: np.ndarray, n_thresholds: int) -> tuple[list[np.ndarray], np.ndarray]:
     """Per-feature quantile thresholds computed ONCE per fit, plus the
     binned matrix (bin = searchsorted-left, so `x <= thr[i]` ⇔
-    `bin <= i`). Histogram split search then costs O(n) per feature
-    per node via bincount + prefix sums instead of O(thresholds · n)
-    masked reductions — ~5x faster fits at equal quality."""
+    `bin <= i`)."""
     thresholds: list[np.ndarray] = []
     binned = np.empty(X.shape, dtype=np.int16)
     grid = np.linspace(0.1, 0.9, n_thresholds)
@@ -64,62 +67,99 @@ def _bin_features(X: np.ndarray, n_thresholds: int) -> tuple[list[np.ndarray], n
     return thresholds, binned
 
 
+class _Histogram:
+    """The binned training matrix, restricted to non-constant features
+    (a constant column has no split), for one-histogram-per-node split
+    search: a node's (feature, bin) histogram is a ``bincount`` of the
+    flat codes ``j * nb + bin`` over all its rows and features. Features
+    go in blocks of at most ``_BLOCK_CODES`` codes at the root, which
+    bounds the per-node temporaries on 100k-row domains; blocking by
+    feature keeps every bin sum in row order."""
+
+    def __init__(self, X: np.ndarray, n_thresholds: int):
+        thresholds, binned = _bin_features(X, n_thresholds)
+        self.features = [f for f, thr in enumerate(thresholds) if thr.size]
+        self.thresholds = [thresholds[f] for f in self.features]
+        self.bins = np.ascontiguousarray(binned[:, self.features])
+        self.nb = n_thresholds + 1
+        n_feat = len(self.features)
+        width = max(1, _BLOCK_CODES // max(X.shape[0], 1))
+        self.blocks = [(lo, min(lo + width, n_feat)) for lo in range(0, n_feat, width)]
+        self.offsets = np.arange(min(width, n_feat), dtype=np.intp) * self.nb
+        # split i (left = bins 0..i) exists iff i < len(thr); with
+        # min_leaf >= 1 the rest already fail (empty right side)
+        sizes = np.array([thr.size for thr in self.thresholds], dtype=np.intp)
+        self.has_split = np.arange(self.nb - 1) < sizes[:, None]
+
+    def node_histograms(self, idx, g, h) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(count, sum g, sum h), each (features, nb), over rows idx."""
+        parts = []
+        for lo, hi in self.blocks:
+            k = hi - lo
+            flat = np.add(self.bins[idx, lo:hi], self.offsets[:k], dtype=np.intp).ravel()
+            size = k * self.nb
+            parts.append((
+                np.bincount(flat, minlength=size),
+                np.bincount(flat, weights=np.repeat(g, k), minlength=size),
+                np.bincount(flat, weights=np.repeat(h, k), minlength=size),
+            ))
+        shape = (len(self.features), self.nb)
+        return tuple(np.concatenate(p).reshape(shape) for p in zip(*parts))
+
+
 def _fit_tree_binned(
-    binned: np.ndarray,
-    thresholds: list[np.ndarray],
+    hist: _Histogram,
     idx: np.ndarray,
     grad: np.ndarray,
     hess: np.ndarray,
     depth: int,
     min_leaf: int,
+    leaf_value: np.ndarray,
 ) -> _Node:
     """Regression tree on -grad with Newton leaf values
-    (sum grad / sum hess), histogram split search."""
+    (sum grad / sum hess). Each node builds ONE (feature, bin)
+    histogram; each leaf writes its value into ``leaf_value[idx]``, so
+    the caller gets the tree's training-row output without a predict
+    walk. ``bincount`` accumulates every bin in row order, so there are
+    no sibling-by-subtraction histograms: those would reorder the float
+    sums, and the fitted trees are pinned bit-identical to a
+    per-feature search (tests/test_models.py)."""
     node = _Node()
     n = idx.shape[0]
     g, h = grad[idx], hess[idx]
     g_sum, h_sum = g.sum(), h.sum()
     node.value = g_sum / (h_sum + _EPS)
-    if depth == 0 or n < 2 * min_leaf:
+    if depth == 0 or n < 2 * min_leaf or not hist.features:
+        leaf_value[idx] = node.value
         return node
 
+    cnt, gs, hs = hist.node_histograms(idx, g, h)
+    # left side of split i = bins 0..i
+    nl = np.cumsum(cnt, axis=1)[:, :-1]
+    gl = np.cumsum(gs, axis=1)[:, :-1]
+    hl = np.cumsum(hs, axis=1)[:, :-1]
+    nr = n - nl
+    valid = hist.has_split & (nl >= min_leaf) & (nr >= min_leaf)
+    gr, hr = g_sum - gl, h_sum - hl
     parent_gain = g_sum * g_sum / (h_sum + _EPS)
-    best_gain, best_f, best_i = 0.0, -1, -1
-    for f in range(binned.shape[1]):
-        thr = thresholds[f]
-        if thr.size == 0:
-            continue
-        b = binned[idx, f]
-        nbins = thr.size + 1
-        cnt = np.bincount(b, minlength=nbins)
-        gs = np.bincount(b, weights=g, minlength=nbins)
-        hs = np.bincount(b, weights=h, minlength=nbins)
-        # left side of split i = bins 0..i
-        nl = np.cumsum(cnt)[:-1]
-        gl = np.cumsum(gs)[:-1]
-        hl = np.cumsum(hs)[:-1]
-        nr = n - nl
-        valid = (nl >= min_leaf) & (nr >= min_leaf)
-        if not valid.any():
-            continue
-        gr, hr = g_sum - gl, h_sum - hl
-        gain = gl * gl / (hl + _EPS) + gr * gr / (hr + _EPS) - parent_gain
-        gain[~valid] = -np.inf
-        i = int(np.argmax(gain))
-        if gain[i] > best_gain + 1e-9:
-            best_gain, best_f, best_i = float(gain[i]), f, i
+    gain = gl * gl / (hl + _EPS) + gr * gr / (hr + _EPS) - parent_gain
+    gain[~valid] = -np.inf
+    split = gain.argmax(axis=1)
+    # first feature (in column order) to beat the running best by 1e-9
+    best_gain, best_j = 0.0, -1
+    for j, gj in enumerate(gain[np.arange(len(split)), split].tolist()):
+        if gj > best_gain + 1e-9:
+            best_gain, best_j = gj, j
 
-    if best_f < 0:
+    if best_j < 0:
+        leaf_value[idx] = node.value
         return node
-    node.feature = best_f
-    node.threshold = float(thresholds[best_f][best_i])
-    mask = binned[idx, best_f] <= best_i
-    node.left = _fit_tree_binned(
-        binned, thresholds, idx[mask], grad, hess, depth - 1, min_leaf
-    )
-    node.right = _fit_tree_binned(
-        binned, thresholds, idx[~mask], grad, hess, depth - 1, min_leaf
-    )
+    best_i = int(split[best_j])
+    node.feature = hist.features[best_j]
+    node.threshold = float(hist.thresholds[best_j][best_i])
+    mask = hist.bins[idx, best_j] <= best_i
+    node.left = _fit_tree_binned(hist, idx[mask], grad, hess, depth - 1, min_leaf, leaf_value)
+    node.right = _fit_tree_binned(hist, idx[~mask], grad, hess, depth - 1, min_leaf, leaf_value)
     return node
 
 
@@ -156,24 +196,33 @@ class GBTClassifier:
         self.trees_: list[_Node] = []
 
     def fit(self, X: np.ndarray, y: np.ndarray) -> "GBTClassifier":
+        self._boost(X, y)
+        return self
+
+    def _boost(self, X: np.ndarray, y: np.ndarray) -> np.ndarray:
+        """Fit, returning the training margin: each tree's leaves write
+        their values straight into the per-row buffer while it grows,
+        which equals ``_predict_tree(tree, X)`` because `bin <= i` ⇔
+        `x <= thr[i]`."""
         X = np.asarray(X, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         p = min(max(y.mean(), 1e-6), 1 - 1e-6)
         self.base_ = float(np.log(p / (1 - p)))
-        thresholds, binned = _bin_features(X, self.n_thresholds)
+        hist = _Histogram(X, self.n_thresholds)
         idx = np.arange(X.shape[0])
         margin = np.full(X.shape[0], self.base_)
+        leaf_value = np.empty(X.shape[0])
         self.trees_ = []
         for _ in range(self.n_estimators):
             prob = _sigmoid(margin)
             grad = y - prob           # negative gradient of logloss
             hess = prob * (1 - prob)
             tree = _fit_tree_binned(
-                binned, thresholds, idx, grad, hess, self.max_depth, self.min_leaf
+                hist, idx, grad, hess, self.max_depth, self.min_leaf, leaf_value
             )
-            margin = margin + self.learning_rate * _predict_tree(tree, X)
+            margin = margin + self.learning_rate * leaf_value
             self.trees_.append(tree)
-        return self
+        return margin
 
     def margin(self, X: np.ndarray) -> np.ndarray:
         X = np.asarray(X, dtype=np.float64)

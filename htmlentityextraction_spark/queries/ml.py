@@ -11,6 +11,8 @@ internals are additionally unit-tested in tests/test_models.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,21 +34,46 @@ _FIT_CURVE = dict(n_estimators=10, max_depth=3, min_doc_freq=5, top_k=100)
 # The reference packages models ONCE and every consumer loads the
 # package (`emr/BuildModels.scala`, `streaming/Htmls2PredsPipe.scala:
 # 89-90`); mirroring that, the labeled-candidate extraction (the
-# pandas-UDF heavy step) is persisted once per (session, sf_dir) and
-# the collected registry rows are memoized per sf_dir (training is
+# pandas-UDF heavy step) is persisted once per (session, input) and
+# the collected registry rows are memoized per input (training is
 # deterministic — seeded, sorted input — so the rows are a pure
-# function of the data). Queries stay independently correct: a cache
-# miss just retrains.
-_LABELED_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_REG_CACHE: dict[str, list] = {}
+# function of the data). Both memos are keyed on the input files'
+# fingerprint, not the sf_dir string, so a fixture rewritten in place
+# retrains. Queries stay independently correct: a cache miss just
+# retrains.
+_LABELED_CACHE: dict[tuple, tuple[SparkSession, DataFrame]] = {}
+_REG_CACHE: dict[tuple, list] = {}
+
+
+def _input_fingerprint(sf_dir: str) -> tuple:
+    """(root, ((path, size, mtime_ns), ...)) over the files of the
+    ``orders`` table, the only input of ``_labeled_candidates``."""
+    root = os.path.abspath(os.path.join(sf_dir, "orders.parquet"))
+    paths = [root] if os.path.isfile(root) else sorted(
+        os.path.join(d, f) for d, _, files in os.walk(root) for f in files
+    )
+    stats = tuple((p, st.st_size, st.st_mtime_ns) for p in paths for st in [os.stat(p)])
+    return root, stats
+
+
+def _drop_stale(cache: dict, key: tuple) -> list:
+    """Pop (and return) the entries of ``key``'s input root whose
+    fingerprint no longer matches."""
+    return [cache.pop(k) for k in [k for k in cache if k[0] == key[0] and k != key]]
 
 
 def _labeled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ent = _LABELED_CACHE.get(sf_dir)
+    key = _input_fingerprint(sf_dir)
+    for old_spark, old_df in _drop_stale(_LABELED_CACHE, key):
+        # Spark's cache matches the new scan's plan to the stale
+        # frame's (same path), so it must be released, not just dropped
+        if old_spark.sparkContext is spark.sparkContext:
+            old_df.unpersist()
+    ent = _LABELED_CACHE.get(key)
     if ent is None or ent[0] is not spark:
         df = _labeled_candidates(spark, sf_dir).persist()
-        _LABELED_CACHE[sf_dir] = (spark, df)
-    return _LABELED_CACHE[sf_dir][1]
+        _LABELED_CACHE[key] = (spark, df)
+    return _LABELED_CACHE[key][1]
 
 
 def fit_once(spark: SparkSession, sf_dir: str) -> list:
@@ -66,10 +93,12 @@ def fit_once(spark: SparkSession, sf_dir: str) -> list:
     the registry stays a DataFrame cogrouped with candidates on
     domain (no collect, no broadcast), equivalence-tested against
     this broadcast path in tests/test_models.py."""
-    if sf_dir not in _REG_CACHE:
+    key = _input_fingerprint(sf_dir)
+    _drop_stale(_REG_CACHE, key)
+    if key not in _REG_CACHE:
         feats = md.featurize_candidates(_labeled_cached(spark, sf_dir))
-        _REG_CACHE[sf_dir] = md.train_per_domain(feats, **_FIT).collect()
-    return _REG_CACHE[sf_dir]
+        _REG_CACHE[key] = md.train_per_domain(feats, **_FIT).collect()
+    return _REG_CACHE[key]
 
 
 def _registry_rows(spark: SparkSession, sf_dir: str) -> list:

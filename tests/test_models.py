@@ -4,9 +4,12 @@ argmax price pick)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
+from htmlentityextraction_spark.operators import gbt
 from htmlentityextraction_spark.operators.gbt import GBTClassifier
 from htmlentityextraction_spark.operators import models as md
 
@@ -238,3 +241,187 @@ def test_gbt_predict_proba_is_sigmoid_of_margin():
     assert np.allclose(proba, 1.0 / (1.0 + np.exp(-margin)))
     assert ((proba > 0.0) & (proba < 1.0)).all()
     assert ((proba > 0.5) == (m.predict(X) == 1)).all()
+
+
+# --- one-histogram-per-node fit vs the frozen per-feature fit ---
+def _reference_tree(binned, thresholds, idx, grad, hess, depth, min_leaf):
+    """The per-feature histogram split search the production kernel
+    replaced: 3 bincounts per feature per node. Frozen here so the
+    one-histogram kernel is pinned to its exact output."""
+    eps = gbt._EPS
+    node = gbt._Node()
+    n = idx.shape[0]
+    g, h = grad[idx], hess[idx]
+    g_sum, h_sum = g.sum(), h.sum()
+    node.value = g_sum / (h_sum + eps)
+    if depth == 0 or n < 2 * min_leaf:
+        return node
+    parent_gain = g_sum * g_sum / (h_sum + eps)
+    best_gain, best_f, best_i = 0.0, -1, -1
+    for f in range(binned.shape[1]):
+        thr = thresholds[f]
+        if thr.size == 0:
+            continue
+        b = binned[idx, f]
+        nbins = thr.size + 1
+        cnt = np.bincount(b, minlength=nbins)
+        gs = np.bincount(b, weights=g, minlength=nbins)
+        hs = np.bincount(b, weights=h, minlength=nbins)
+        nl = np.cumsum(cnt)[:-1]
+        gl = np.cumsum(gs)[:-1]
+        hl = np.cumsum(hs)[:-1]
+        nr = n - nl
+        valid = (nl >= min_leaf) & (nr >= min_leaf)
+        if not valid.any():
+            continue
+        gr, hr = g_sum - gl, h_sum - hl
+        gain = gl * gl / (hl + eps) + gr * gr / (hr + eps) - parent_gain
+        gain[~valid] = -np.inf
+        i = int(np.argmax(gain))
+        if gain[i] > best_gain + 1e-9:
+            best_gain, best_f, best_i = float(gain[i]), f, i
+    if best_f < 0:
+        return node
+    node.feature = best_f
+    node.threshold = float(thresholds[best_f][best_i])
+    mask = binned[idx, best_f] <= best_i
+    node.left = _reference_tree(binned, thresholds, idx[mask], grad, hess, depth - 1, min_leaf)
+    node.right = _reference_tree(binned, thresholds, idx[~mask], grad, hess, depth - 1, min_leaf)
+    return node
+
+
+def _reference_fit(X, y, **params):
+    """Boosting loop that re-predicts each new tree over X."""
+    m = GBTClassifier(**params)
+    X = np.asarray(X, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    p = min(max(y.mean(), 1e-6), 1 - 1e-6)
+    m.base_ = float(np.log(p / (1 - p)))
+    thresholds, binned = gbt._bin_features(X, m.n_thresholds)
+    idx = np.arange(X.shape[0])
+    margin = np.full(X.shape[0], m.base_)
+    for _ in range(m.n_estimators):
+        prob = gbt._sigmoid(margin)
+        grad, hess = y - prob, prob * (1 - prob)
+        tree = _reference_tree(binned, thresholds, idx, grad, hess, m.max_depth, m.min_leaf)
+        margin = margin + m.learning_rate * gbt._predict_tree(tree, X)
+        m.trees_.append(tree)
+    return m
+
+
+def _tfidf_like(rng, n, f):
+    """Sparse non-negative columns (mostly exact zeros, so quantile
+    thresholds land ON data values), some constant, plus a location."""
+    X = rng.exponential(1.0, (n, f)) * (rng.random((n, f)) < 0.15)
+    X[:, rng.choice(f, size=max(f // 5, 1), replace=False)] = 0.0
+    X[:, -1] = rng.random(n)
+    y = (X[:, 0] + 0.5 * X[:, 1] + 0.2 * rng.standard_normal(n) > 0.3).astype(float)
+    return X, y
+
+
+def _tie_matrix(rng, n):
+    """Duplicated columns (equal gains on different features), small
+    integer codes (x exactly equal to a threshold), a constant column."""
+    base = rng.integers(0, 4, size=(n, 3)).astype(float)
+    X = np.column_stack([base[:, 0], base[:, 0], base[:, 1], np.full(n, 2.0),
+                         base[:, 2], base[:, 1]])
+    y = ((base[:, 0] >= 2) ^ (rng.random(n) < 0.1)).astype(float)
+    return X, y
+
+
+def _assert_same_model(X, y, **params):
+    want = _reference_fit(X, y, **params)
+    got = GBTClassifier(**params).fit(X, y)
+    assert got.to_bytes() == want.to_bytes()
+    return got
+
+
+def test_one_histogram_fit_is_byte_identical_to_per_feature_fit():
+    for seed in range(12):
+        rng = np.random.default_rng(seed)
+        X, y = _tfidf_like(rng, int(rng.integers(40, 400)), int(rng.integers(2, 30)))
+        _assert_same_model(X, y, n_estimators=8, max_depth=4)
+        X, y = _tie_matrix(rng, int(rng.integers(30, 300)))
+        _assert_same_model(X, y, n_estimators=8, max_depth=4)
+
+
+def test_feature_blocked_histograms_are_byte_identical(monkeypatch):
+    # a tiny per-block code cap splits the features into many blocks,
+    # the shape a 100k-row domain takes
+    monkeypatch.setattr(gbt, "_BLOCK_CODES", 500)
+    rng = np.random.default_rng(5)
+    X, y = _tfidf_like(rng, 120, 23)
+    assert len(gbt._Histogram(X, 16).blocks) > 3
+    _assert_same_model(X, y, n_estimators=6, max_depth=4)
+
+
+def test_one_histogram_fit_edge_cases():
+    rng = np.random.default_rng(99)
+    # tied gains across features: the first column in order must win
+    X, y = _tie_matrix(rng, 200)
+    m = _assert_same_model(X, y, n_estimators=4, max_depth=3)
+    assert m.trees_[0].feature == 0
+    # only constant columns: every tree is a single leaf
+    m = _assert_same_model(np.ones((50, 3)), (np.arange(50) % 2).astype(float),
+                           n_estimators=3, max_depth=3)
+    assert all(t.feature == -1 for t in m.trees_)
+    # nodes below 2*min_leaf rows stop splitting (root too, at n=9)
+    _assert_same_model(*_tfidf_like(rng, 9, 4), n_estimators=3, max_depth=3)
+    _assert_same_model(*_tfidf_like(rng, 60, 4), n_estimators=5, max_depth=6, min_leaf=8)
+    # min_leaf=0: only real thresholds may split, never the empty bins past them
+    _assert_same_model(*_tfidf_like(rng, 80, 6), n_estimators=4, max_depth=4, min_leaf=0)
+    # a single feature, continuous and with repeated values
+    _assert_same_model(rng.standard_normal((120, 1)), (rng.random(120) < 0.4).astype(float),
+                       n_estimators=6, max_depth=4)
+    x = rng.integers(0, 5, size=(150, 1)).astype(float)
+    _assert_same_model(x, (x[:, 0] >= 3).astype(float), n_estimators=4, max_depth=2)
+    # x values exactly on thresholds: the split routes x == thr left
+    m = _assert_same_model(x, (x[:, 0] >= 3).astype(float), n_estimators=1, max_depth=1)
+    assert m.trees_[0].threshold in set(x[:, 0].tolist())
+
+
+def test_fit_margin_equals_model_margin_bit_for_bit():
+    # fit accumulates leaf values per row instead of re-predicting X;
+    # that is exact only because bin <= i  <=>  x <= thr[i]
+    for seed in range(6):
+        rng = np.random.default_rng(100 + seed)
+        for X, y in (_tfidf_like(rng, 300, 12), _tie_matrix(rng, 200)):
+            m = GBTClassifier(n_estimators=10, max_depth=5)
+            fit_margin = m._boost(X, y)
+            assert fit_margin.tobytes() == m.margin(X).tobytes()
+
+
+def test_registry_memo_retrains_when_fixture_is_rewritten_in_place(spark, sf_dir, tmp_path):
+    """The registry memo is keyed on the input files' (path, size,
+    mtime_ns), not the sf_dir string: rewriting orders.parquet in place
+    in the same process must retrain, not serve the old registry."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from htmlentityextraction_spark.queries import ml
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    orders = d / "orders.parquet"
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), orders)
+    try:
+        first = ml.fit_once(spark, str(d))
+        assert ml.fit_once(spark, str(d)) is first, "unchanged input must hit the memo"
+        domains = {r.domain for r in first}
+        assert "d3.example.com" in domains
+
+        # drop domain d3 (o_orderkey % 8 == 3) and rewrite the file in place
+        t = pq.read_table(orders)
+        pq.write_table(t.filter(pc.not_equal(pc.bit_wise_and(t["o_orderkey"], 7), 3)), orders)
+        second = ml.fit_once(spark, str(d))
+        assert {r.domain for r in second} == domains - {"d3.example.com"}
+        assert len(ml._REG_CACHE) == len({k[0] for k in ml._REG_CACHE}), "stale memo kept"
+    finally:
+        root = str(orders)
+        for cache in (ml._REG_CACHE, ml._LABELED_CACHE):
+            for k in [k for k in cache if k[0] == root]:
+                ent = cache.pop(k)
+                if cache is ml._LABELED_CACHE:
+                    ent[1].unpersist()
